@@ -149,13 +149,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
 
     // Incrementally collected state: the finally block below serializes
     // whatever is here, so a mid-run crash still yields a parseable line.
-    val samples = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
-    val starts = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+    val samples = new Samples
     val passWindows = mutable.ArrayBuffer.empty[(Double, Double)]
     var fatal: Option[String] = None
     var spark: SparkSession = null
@@ -166,18 +164,8 @@ object Bench {
     def epoch(): Double = System.currentTimeMillis() / 1000.0
 
     try {
-      spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_bench_wh_").toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      spark = Sessions.local("Bench", conf = Seq("spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_bench_wh_").toString))
       // warmup: JVM/codegen/parquet-footer costs land here, not in query 1
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
@@ -299,14 +287,8 @@ object Bench {
       for (_ <- 1 to reps) {
         val p0 = epoch()
         for (name <- names) {
-          val s0 = epoch()
-          val t0 = System.nanoTime()
-          try runOnce(name)
-          catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-          val dt = (System.nanoTime() - t0) / 1e9
+          samples.time(name)(runOnce(name))
           spark.catalog.clearCache() // no cross-query cache effects in timings
-          samples.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += dt
-          starts.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += s0
         }
         passWindows += ((p0, epoch()))
       }
@@ -314,36 +296,6 @@ object Bench {
       fatal = Some(e.toString)
       System.err.println(s"[bench] fatal: $e")
     } finally {
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.length % 2 == 1) s(s.length / 2)
-        else (s(s.length / 2 - 1) + s(s.length / 2)) / 2 // midpoint for even n
-      }
-      // Locale-proof formatting: the f-interpolator honors the default
-      // locale, and a comma decimal separator would corrupt the JSON.
-      def fm(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\r\n\t]", " ")
-      // stdout medians at 2 decimals: the contract line lives in a ~2 KB
-      // tail budget and one char per query is ~65 chars of headroom; the
-      // envelope margins are 2×, so 10 ms precision loses nothing. The
-      // detail file keeps 3 decimals.
-      def fm2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-      val all = samples.toSeq.filter(_._2.nonEmpty)
-      val qs = all.map { case (k, v) => "\"" + k + "\":" + fm(median(v.toSeq)) }
-        .mkString("{", ",", "}")
-      val qs2 = all.map { case (k, v) => "\"" + k + "\":" + fm2(median(v.toSeq)) }
-        .mkString("{", ",", "}")
-      val raw = all.map { case (k, v) => "\"" + k + "\":" + v.map(fm).mkString("[", ",", "]") }
-        .mkString("{", ",", "}")
-      val st = all.map { case (k, _) =>
-        "\"" + k + "\":" + starts.getOrElse(k, mutable.ArrayBuffer.empty[Double])
-          .map(fm).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val pw = passWindows.map { case (a, b) => s"[${fm(a)},${fm(b)}]" }
-        .mkString("[", ",", "]")
-      val total = all.map { case (_, v) => median(v.toSeq) }.sum
-      val err = fatal.map(m => s""","error":"${esc(m)}"""").getOrElse("")
       // The stdout contract line must stay COMPACT: downstream capture
       // keeps only the final ~2000 chars of output, and in rounds 1-6
       // the raw-sample arrays pushed the line past that limit, so its
@@ -351,12 +303,11 @@ object Bench {
       // on stdout; full per-sample diagnostics go to a detail file
       // (+ stderr) referenced from the line.
       val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
-      val detail =
-        s"""{"metric":"total","value":${fm(total)},"unit":"sec","queries":$qs,"samples":$raw,"sample_starts":$st,"passes":$pw,"reps":$reps,"sf":"${esc(sfDir)}"$err}"""
+      val (detail, line) = render(samples, passWindows.toSeq, reps, sfDir, detailPath, fatal)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] detail write: $e") }
       System.err.println(s"[bench] detail: $detail")
-      println(s"""{"metric":"total","value":${fm2(total)},"unit":"sec","queries":$qs2,"sf":"${esc(sfDir)}","detail":"${esc(detailPath)}"$err}""")
+      println(line)
       Console.out.flush()
       if (bloomScratch != null) try {
         import scala.jdk.CollectionConverters._
@@ -367,6 +318,64 @@ object Bench {
       } catch { case _: Throwable => () }
       if (spark != null) try spark.stop() catch { case _: Throwable => () }
     }
+  }
+
+  /** Per-query samples collected over the passes. A query that throws is
+    * counted in `failed` and never timed: its wall time measures how
+    * early it died, and in the median it would read as a fast run. */
+  private[graft] final class Samples {
+    val times = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+    val starts = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+    val failed = mutable.LinkedHashMap.empty[String, Int]
+
+    def time(name: String)(run: => Unit): Unit = {
+      val s0 = System.currentTimeMillis() / 1000.0
+      val t0 = System.nanoTime()
+      try {
+        run
+        val dt = (System.nanoTime() - t0) / 1e9
+        times.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += dt
+        starts.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += s0
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name: $e")
+        failed(name) = failed.getOrElse(name, 0) + 1
+      }
+    }
+  }
+
+  /** The detail-file JSON and the compact stdout contract line. */
+  private[graft] def render(samples: Samples, passWindows: Seq[(Double, Double)],
+      reps: Int, sfDir: String, detailPath: String,
+      fatal: Option[String]): (String, String) = {
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2 // midpoint for even n
+    }
+    // Locale-proof formatting: the f-interpolator honors the default
+    // locale, and a comma decimal separator would corrupt the JSON.
+    def fm(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // stdout medians at 2 decimals: the contract line lives in a ~2 KB
+    // tail budget and one char per query is ~65 chars of headroom; the
+    // envelope margins are 2×, so 10 ms precision loses nothing. The
+    // detail file keeps 3 decimals.
+    def fm2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replaceAll("[\r\n\t]", " ")
+    def obj(kvs: Iterable[(String, String)]) =
+      kvs.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
+    val all = samples.times.toSeq.filter(_._2.nonEmpty)
+    val qs = obj(all.map { case (k, v) => k -> fm(median(v.toSeq)) })
+    val qs2 = obj(all.map { case (k, v) => k -> fm2(median(v.toSeq)) })
+    val raw = obj(all.map { case (k, v) => k -> v.map(fm).mkString("[", ",", "]") })
+    val st = obj(all.map { case (k, _) => k -> samples.starts(k).map(fm).mkString("[", ",", "]") })
+    val failed = obj(samples.failed.map { case (k, n) => k -> n.toString })
+    val pw = passWindows.map { case (a, b) => s"[${fm(a)},${fm(b)}]" }
+      .mkString("[", ",", "]")
+    val total = all.map { case (_, v) => median(v.toSeq) }.sum
+    val err = fatal.map(m => s""","error":"${esc(m)}"""").getOrElse("")
+    (s"""{"metric":"total","value":${fm(total)},"unit":"sec","queries":$qs,"failed":$failed,"samples":$raw,"sample_starts":$st,"passes":$pw,"reps":$reps,"sf":"${esc(sfDir)}"$err}""",
+      s"""{"metric":"total","value":${fm2(total)},"unit":"sec","queries":$qs2,"failed":$failed,"sf":"${esc(sfDir)}","detail":"${esc(detailPath)}"$err}""")
   }
 
   private def timeMigrateSeq(spark: SparkSession): Double = {

@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotLog
@@ -19,16 +18,9 @@ import graft.sources.SnapshotLog
 object LifecycleDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_lifecycle")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("LifecycleDemo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.catalog.lake", "graft.sources.SnapshotCatalog")
-      .config("spark.sql.catalog.lake.root", outDir)
-      .getOrCreate()
+    val spark = graft.Sessions.local("LifecycleDemo", conf = Seq(
+      "spark.sql.catalog.lake" -> "graft.sources.SnapshotCatalog",
+      "spark.sql.catalog.lake.root" -> outDir))
     try {
       spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.demo")
 

@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 
 import graft.migrator.{Migrator, Observability}
 
@@ -16,13 +15,8 @@ import graft.migrator.{Migrator, Observability}
 object MigrateDemo {
   def main(args: Array[String]): Unit = {
     val scratch = args.headOption.getOrElse("/tmp/graft_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("MigrateDemo",
+      conf = Seq("spark.sql.warehouse.dir" -> s"$scratch/warehouse"))
 
     // stage migration fixtures: V1 creates pytest.sample, V2 (json) adds 3 tables
     val home = s"$scratch/migrations"

@@ -729,6 +729,17 @@ object HhItem {
 object BpeNorm {
   private val digitMap: Array[Byte] = "qwertyuiop".getBytes("US-ASCII")
 
+  /** Byte length of the wrapped form of `kept` surviving characters,
+    * each rendered as 3 bytes `(c)`. Computed as a Long: `3 * kept`
+    * wraps in Int above ~715 M kept characters. */
+  private[graft] def wrappedLength(kept: Int): Int = {
+    val len = 3L * kept
+    if (len > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"bpe output exceeds max array size: $len bytes for $kept kept characters")
+    len.toInt
+  }
+
   def compute(t: org.apache.spark.unsafe.types.UTF8String, wrap: Boolean)
       : org.apache.spark.unsafe.types.UTF8String = {
     val bytes = t.getBytes
@@ -747,7 +758,7 @@ object BpeNorm {
           if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) kept += 1
           j += 1
         }
-        3 * kept // kept <= n/…: only a-z0-9 survive, each renders 3 bytes
+        wrappedLength(kept)
       }
     val out = new Array[Byte](outLen)
     var k = 0

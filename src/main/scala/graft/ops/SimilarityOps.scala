@@ -333,7 +333,7 @@ object SimilarityOps {
     * [[annIvfCentroid]]'s contrast note names, now implemented and
     * gate-checked: [[annIvfKmeans]]'s in-row literal fold renders the
     * model as CODE, and every planning phase that walks the tree pays
-    * for it — measured in [[graft.tools.AssignRegimeBench]], the
+    * for it — measured by the AssignRegimeBench study tool, the
     * literal plan costs ~57 s of pure pre-first-row overhead at
     * K=16384 (27 MB of rendered SQL), 30× this regime's ~1.9 s and
     * linear in K. Here the trained model
@@ -756,8 +756,8 @@ object SimilarityOps {
   /** [[annPqRerank]] with the shortlist width as a parameter — the one
     * serving knob the two-stage plan exposes (wider = more raw-vector
     * point lookups per query, higher recall ceiling). The catalog entry
-    * pins width = [[PqShortlist]]; [[graft.tools.PqWidthStudy]] sweeps
-    * it to measure the recall/IO frontier. */
+    * pins width = [[PqShortlist]]; the PqWidthStudy study tool swept
+    * it to measure the recall/IO frontier (SCALING.md). */
   private[graft] def pqRerankWidth(
       s: SparkSession, dir: String, width: Int,
       dims: Int = 64, m: Int = PqM, subDim: Int = PqSubDim): DataFrame = {

@@ -1767,16 +1767,19 @@ object TextOps {
     // conditional string concat. `hh_item` streams the digest over the
     // same bytes and reads the item from a precomputed table —
     // bit-exact (HhItemSpec pins the parity against the SQL form,
-    // which stays as the extension-absent fallback).
-    if (s.catalog.functionExists("hh_item"))
-      occ.withColumn("item", expr("hh_item(tk, doc_id)"))
-    else occ
-      .withColumn("u", pmod(expr(
-        "cast(conv(substring(md5(concat(tk, ':', cast(doc_id as string))), 1, 13), 16, 10) as bigint)"),
-        lit(1024L)))
-      .withColumn("item",
-        when(col("u") < 512, concat(lit("hot_"), expr("cast(u div 64 as string)")))
-          .otherwise(concat(lit("rare_"), col("u").cast("string"))))
+    // which stays as the extension-absent fallback). Both branches end
+    // in the same projection, so callers see one schema either way.
+    val items =
+      if (s.catalog.functionExists("hh_item"))
+        occ.withColumn("item", expr("hh_item(tk, doc_id)"))
+      else occ
+        .withColumn("u", pmod(expr(
+          "cast(conv(substring(md5(concat(tk, ':', cast(doc_id as string))), 1, 13), 16, 10) as bigint)"),
+          lit(1024L)))
+        .withColumn("item",
+          when(col("u") < 512, concat(lit("hot_"), expr("cast(u div 64 as string)")))
+            .otherwise(concat(lit("rare_"), col("u").cast("string"))))
+    items.select("doc_id", "tk", "item")
   }
 
   /** Exact heavy hitters: full groupBy + 1-row-total broadcast compare.

@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.DedupOps
@@ -36,18 +35,10 @@ object CcSpillBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("CC_SPILL_N", "8000000").toLong
     val chain = sys.env.getOrElse("CC_SPILL_L", "64").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     def run(memFraction: Option[String]): (Double, Long, Long, Long) = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(s"cc_spill_${memFraction.getOrElse("default")}")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      memFraction.foreach(f => b.config("spark.memory.fraction", f))
-      val spark = b.getOrCreate()
+      val spark = graft.Sessions.local(s"cc_spill_${memFraction.getOrElse("default")}",
+        conf = memFraction.map("spark.memory.fraction" -> _).toSeq)
       spark.sparkContext.setLogLevel("ERROR")
       val memSpill = new AtomicLong(0)
       val diskSpill = new AtomicLong(0)

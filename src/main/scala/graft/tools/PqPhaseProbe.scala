@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe for VERDICT r19 item 4: where does ann_mrl_pq_topk
   * spend its time — the training barriers (fused mean/init agg + Lloyd
   * collects) or the serve plan (ADC BNLJ + windows + rerank)? Also
@@ -10,16 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PqPhaseProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("PqPhaseProbe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$dir/lineitem.parquet").count() // warmup as Bench
 

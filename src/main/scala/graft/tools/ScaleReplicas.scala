@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-replica generator for the measured-scaling study (SCALING.md).
@@ -28,13 +27,7 @@ object ScaleReplicas {
     require(args.length == 3, "usage: ScaleReplicas <srcSfDir> <outDir> <factor>")
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("ScaleReplicas")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val docStride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1

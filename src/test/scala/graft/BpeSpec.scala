@@ -92,4 +92,14 @@ class BpeSpec extends SparkSpec {
     val b = fallback.collect().map(_.toSeq).toSet
     assert(a.nonEmpty && a == b)
   }
+
+  test("the wrapped output length is computed in Long and refused above Int.MaxValue") {
+    import graft.functions.BpeNorm.wrappedLength
+    assert(wrappedLength(0) == 0)
+    assert(wrappedLength(Int.MaxValue / 3) == 3 * (Int.MaxValue / 3))
+    // one more kept character wraps 3 * kept in Int; the guard names it
+    val e = intercept[IllegalArgumentException](wrappedLength(Int.MaxValue / 3 + 1))
+    assert(e.getMessage.contains("bpe output exceeds max array size"), e.getMessage)
+    intercept[IllegalArgumentException](wrappedLength(Int.MaxValue))
+  }
 }

@@ -48,4 +48,19 @@ class CatalogSpec extends AnyFunSuite {
     val unknown = Bench.headline.filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"headline references unknown queries: $unknown")
   }
+
+  test("bench records a query that throws as failed, never as a timing") {
+    val samples = new Bench.Samples
+    samples.time("ok")(())
+    samples.time("boom")(throw new RuntimeException("query failed"))
+    samples.time("boom")(())
+    samples.time("dead")(throw new RuntimeException("query failed"))
+    assert(samples.times("boom").size == 1 && !samples.times.contains("dead"))
+    assert(samples.failed.toMap == Map("boom" -> 1, "dead" -> 1))
+    val (detail, line) = Bench.render(samples, Nil, 2, "sf", "detail.json", None)
+    for (json <- Seq(detail, line))
+      assert(json.contains(""""failed":{"boom":1,"dead":1}"""), json)
+    assert(line.contains(""""queries":{"ok":0.00,"boom":0.00}"""), line)
+    assert(detail.contains(""""samples":{"ok":[0.000],"boom":[0.000]}"""), detail)
+  }
 }

@@ -17,6 +17,17 @@ class FixtureSchemaSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  test("the shared session carries the Sessions.local invariants") {
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.master") == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.ui.enabled") == "false" && spark.sparkContext.uiWebUrl.isEmpty)
+    assert(spark.conf.get("spark.sql.warehouse.dir").endsWith(s"$scratch/warehouse"))
+    assert(spark.sql("SELECT vec_dot(array(1d, 2d), array(3d, 4d))").head().getDouble(0) == 11.0)
+  }
+
   private def fieldTypes(table: String): Map[String, DataType] =
     spark.read.parquet(s"$sfDir/$table.parquet")
       .schema.fields.map(f => f.name -> f.dataType).toMap

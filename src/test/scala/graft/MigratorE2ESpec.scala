@@ -101,7 +101,7 @@ class MigratorE2ESpec extends SparkSpec {
       "V1__create_test.sql" ->
         "CREATE TABLE pytest.ingested(id UInt32, name UInt32) ENGINE MergeTree PARTITION BY tuple() ORDER BY tuple()",
       "V2_ingest_and_flag.json" ->
-        """["INSERT INTO pytest.ingested FROM INFILE '/root/reference/tests/migrations_seq/test.csv.gz' FORMAT CSVWithNames",
+        s"""["INSERT INTO pytest.ingested FROM INFILE '$seqCsv' FORMAT CSVWithNames",
            |"ALTER TABLE pytest.ingested ADD COLUMN enabled UInt32 DEFAULT 1",
            |"ALTER TABLE pytest.ingested UPDATE enabled=0 WHERE name > 3000"]""".stripMargin)
     Migrator.migrate(spark, "pytest", home, s"$scratch/ledger_ingest")

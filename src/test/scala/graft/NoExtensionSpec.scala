@@ -122,6 +122,22 @@ class NoExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cms == exact)
   }
 
+  test("hhItems returns one schema with and without the native hh_item") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+    assert(!spark.catalog.functionExists("hh_item"))
+    val fallback = ops.TextOps.hhItems(spark, sfDir).schema
+    // a child session with only the native hh_item registered takes the
+    // other branch
+    val native = spark.newSession()
+    native.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier("hh_item"),
+      new ExpressionInfo(classOf[functions.HhItem].getName, "hh_item"),
+      (children: Seq[Expression]) => functions.HhItem(children(0), children(1)))
+    assert(native.catalog.functionExists("hh_item"))
+    assert(ops.TextOps.hhItems(native, sfDir).schema == fallback)
+  }
+
   test("the streaming frequent-items twin degrades to exact streaming candidates") {
     assert(!spark.catalog.functionExists("mg_sketch"))
     val rows = SparkEntry.queries("events_heavy_hitters_stream_twin")(spark, sfDir)

@@ -10,9 +10,9 @@ class SourcesSpec extends SparkSpec {
 
   test("gzip CSV ingest matches the reference workload invariants") {
     // reference: tests/test_clickhouse_migration.py:101 — gunzip | bulk
-    // insert of 100k rows with header id,name
+    // insert of 100k rows with header id,name (SparkSpec's stand-in file)
     val df = spark.read.option("header", "true").schema("id INT, name INT")
-      .csv("/root/reference/tests/migrations_seq/test.csv.gz")
+      .csv(seqCsv)
     assert(df.count() == 100000L)
     assert(df.filter(col("id").isNull || col("name").isNull).count() == 0)
   }

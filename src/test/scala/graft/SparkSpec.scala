@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -11,16 +11,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val scratch: String = Files.createTempDirectory("graft_test_").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(getClass.getSimpleName, cpus = 4,
+    conf = Seq("spark.sql.warehouse.dir" -> s"$scratch/warehouse"))
+
+  /** A stand-in for the reference's `tests/migrations_seq/test.csv.gz`,
+    * written once per suite: gzip CSV, header `id,name`, 100k rows, ids
+    * 1..n, non-null UInt32 names of which about half are `> 3000`
+    * (seeded, so every run sees the same file). */
+  lazy val seqCsv: String = {
+    val path = Paths.get(scratch, "migrations_seq", "test.csv.gz")
+    Files.createDirectories(path.getParent)
+    val rnd = new scala.util.Random(20260101L)
+    val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(Files.newOutputStream(path)), "UTF-8"))
+    try {
+      out.print("id,name\n")
+      (1 to 100000).foreach(id => out.print(s"$id,${rnd.nextInt(6000)}\n"))
+    } finally out.close()
+    path.toString
+  }
 
   override def afterAll(): Unit = {
     spark.stop()

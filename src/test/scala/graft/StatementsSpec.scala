@@ -133,9 +133,9 @@ class StatementsSpec extends SparkSpec {
     spark.sql("CREATE DATABASE IF NOT EXISTS st")
     Statements.execute(spark,
       "CREATE TABLE st.ingest(id UInt32, name UInt32) ENGINE MergeTree")
-    // the reference's own 100k-row gzip fixture (header: id,name)
+    // the stand-in for the reference's 100k-row gzip fixture (header: id,name)
     Statements.execute(spark,
-      "INSERT INTO st.ingest FROM INFILE '/root/reference/tests/migrations_seq/test.csv.gz' FORMAT CSVWithNames")
+      s"INSERT INTO st.ingest FROM INFILE '$seqCsv' FORMAT CSVWithNames")
     assert(spark.table("st.ingest").count() == 100000)
     assert(spark.table("st.ingest").filter("name > 3000").count() > 0)
     spark.sql("DROP TABLE st.ingest")

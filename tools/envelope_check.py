@@ -176,6 +176,8 @@ def main(argv):
                   f"(envelope {2*a:.3f}, {sec/a:.1f}x)")
         for q in unanchored:
             print(f"  UNANCHORED {q}: {queries[q]:.3f}s — add to tools/anchors.json")
+        for q, n in bench.get("failed", {}).items():
+            print(f"  FAILED {q}: {n} sample(s) threw and were not timed")
         if bench.get("error"):
             print(f"  error field: {bench['error']}")
         any_breach |= bool(breaches) and not contaminated

@@ -3,29 +3,27 @@ package graft.migrator
 import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** The ordered apply loop.
   *
   * Mirrors the reference's `apply_migration` + `pipelined`
-  * (reference: clickhouse_migrate/migrate.py:44-71): sort pending
-  * migrations by version ascending, for each read the script file
-  * (`.json` → statement array in array order, `.sql` → one statement),
-  * execute statements sequentially, then append the ledger row — *after*
-  * all statements of that version succeed (at-least-once semantics,
-  * SURVEY §3.3; do not invent atomicity the reference doesn't have).
+  * (reference: clickhouse_migrate/migrate.py:44-71): for each pending
+  * migration read the script file (`.json` → statement array in array
+  * order, `.sql` → one statement), execute its statements sequentially,
+  * then append the ledger row — *after* all of them succeed
+  * (at-least-once semantics, SURVEY §3.3; no invented atomicity).
   *
-  * Order + stop-on-failure across versions is semantic
-  * (reference: README.md:58) — the pending list is collected to the
-  * driver (it is tiny metadata) and iterated sequentially; the heavy
-  * lifting inside each statement is still fully distributed.
+  * Order + stop-on-failure across versions is semantic (reference:
+  * README.md:58): `pending` arrives in version order from
+  * [[Reconcile.toApply]] (migrate.py:47) and runs one version at a time;
+  * the work inside each statement is still distributed.
   *
   * `queueExec` / `timeoutSec` keep API parity with the reference's
-  * mutation-completion barrier (migrate.py:56-71). In Spark every write
-  * is synchronous, so the barrier is the no-op it should be: executing
-  * statements in order IS sequential consistency (SURVEY §2.10). The
-  * timeout is still honored as a per-statement wall-clock guard.
+  * mutation-completion barrier (migrate.py:56-71). Spark writes are
+  * synchronous, so executing statements in order IS the barrier (SURVEY
+  * §2.10); the timeout remains a per-statement wall-clock guard.
   */
 object Apply {
 
@@ -44,27 +42,19 @@ object Apply {
   def applyMigrations(
       spark: SparkSession,
       ledger: Ledger,
-      pending: DataFrame,
+      pending: Seq[Migration],
       queueExec: Boolean = true,
       timeoutSec: Long = 3600L,
       listener: Option[Observability.MigrationListener] = None): Unit = {
     if (pending.isEmpty) return // reference: migrate.py:45-46
-    val ordered = pending
-      .orderBy("version") // reference: migrate.py:47
-      .collect()
-      .map(r => Migration(
-        r.getAs[Any]("version").toString.toInt,
-        r.getAs[String]("script"),
-        r.getAs[String]("md5")))
     listener.foreach(spark.listenerManager.register)
-    // with a listener attached, drain the (async) listener bus after each
-    // statement so metric attribution to `currentLabel` is exact — the
-    // drain costs microseconds against statement work and only runs when
-    // observing
+    // with a listener attached, drain the async listener bus after each
+    // statement so metric attribution to `currentLabel` is exact (costs
+    // microseconds, and only when observing)
     def drained(): Unit = listener.foreach(_ =>
       org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark))
     try {
-      ordered.foreach { m =>
+      pending.foreach { m =>
         readStatements(m.script).foreach { statement =>
           listener.foreach(_.currentLabel = statement)
           executeWithDeadline(spark, statement, queueExec, timeoutSec)
@@ -75,10 +65,9 @@ object Apply {
         drained()
       }
     } finally listener.foreach { l =>
-      // drain BEFORE unregistering, also on the failure path — the
-      // onFailure event for a failing statement (and trailing
-      // onSuccess events) are still in flight on the async bus, and
-      // they are exactly what the observability surface must record
+      // drain BEFORE unregistering, also on failure: the failing
+      // statement's onFailure event (and trailing onSuccess events) may
+      // still be in flight on the bus, and the listener must record them
       drained()
       spark.listenerManager.unregister(l)
     }

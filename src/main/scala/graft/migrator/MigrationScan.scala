@@ -4,8 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.security.MessageDigest
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Discovery of migration files in a directory.
   *
@@ -14,18 +13,10 @@ import org.apache.spark.sql.functions._
   * `*.json`, parse the version from the filename prefix `V<digits>`
   * before the first `_` (both `V1__x.sql` and `V2_y.json` fixture forms
   * occur — reference: tests/migrations_mixed/), md5 the file bytes.
-  *
-  * Two implementations:
-  *  - [[scan]] — driver-side `java.nio`. The migration set is tiny
-  *    metadata (tens of rows); distributing it would be cargo-cult.
-  *  - [[scanDistributed]] — `binaryFile` DataFrame source + built-in
-  *    `md5(content)`. Same result, demonstrates the scan as a real
-  *    distributed source for the (hypothetical) case of a huge
-  *    migration store on object storage.
+  * Driver-side `java.nio`: the migration set is tiny metadata (tens of
+  * rows), in directory-listing order, not version order.
   */
 object MigrationScan {
-
-  private val VersionRe = "^V(\\d+)".r
 
   def parseVersion(fileName: String): Int =
     // reference: migrate.py:84 — int(f.name.split('_')[0].replace('V',''))
@@ -35,30 +26,23 @@ object MigrationScan {
     MessageDigest.getInstance("MD5").digest(bytes)
       .map(b => f"$b%02x").mkString
 
-  def scan(spark: SparkSession, migrationsHome: String): Dataset[Migration] = {
-    import spark.implicits._
+  /** The migration files of `migrationsHome`; none if it is not a directory. */
+  def migrations(migrationsHome: String): Seq[Migration] = {
     val dir = Paths.get(migrationsHome)
     val files: Seq[Path] =
       if (Files.isDirectory(dir)) Files.list(dir).iterator().asScala.toSeq
       else Seq.empty
-    val migrations = files
+    files
       .filter(p => p.getFileName.toString.endsWith(".sql") || p.getFileName.toString.endsWith(".json"))
       .map { p =>
         val name = p.getFileName.toString
         Migration(parseVersion(name), s"$migrationsHome/$name", md5Hex(Files.readAllBytes(p)))
       }
-    spark.createDataset(migrations)
   }
 
-  /** DataFrame-native variant: `binaryFile` source, md5 + regexp in the
-    * plan (SURVEY §2.1 S2's distributed mapping). */
-  def scanDistributed(spark: SparkSession, migrationsHome: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.{sql,json}")
-      .load(migrationsHome)
-      .select(
-        regexp_extract(element_at(split(col("path"), "/"), -1), "^V(\\d+)", 1)
-          .cast("int").as("version"),
-        col("path").as("script"),
-        md5(col("content")).as("md5"))
+  /** [[migrations]] as a (local) Dataset. */
+  def scan(spark: SparkSession, migrationsHome: String): Dataset[Migration] = {
+    import spark.implicits._
+    spark.createDataset(migrations(migrationsHome))
+  }
 }

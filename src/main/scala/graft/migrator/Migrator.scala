@@ -8,6 +8,8 @@ import org.apache.spark.sql.SparkSession
   * (reference: clickhouse_migrate/migrate.py:79-88): optionally create
   * the database, init the ledger, scan the migrations directory,
   * reconcile against the ledger, apply the pending set in version order.
+  * Scan and reconcile run on the driver, like the reference's pandas
+  * steps; a call with nothing pending starts one Spark job (ledger read).
   */
 object Migrator {
 
@@ -24,8 +26,8 @@ object Migrator {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $dbName")
     val ledger = new Ledger(spark, ledgerPath)
     ledger.init() // reference: migrate.py:22-23,83
-    val incoming = MigrationScan.scan(spark, migrationsHome).toDF() // migrate.py:84-86
-    val pending = Reconcile.migrationsToApply(ledger.committed(), incoming) // migrate.py:87
+    val incoming = MigrationScan.migrations(migrationsHome) // migrate.py:84-86
+    val pending = Reconcile.toApply(ledger.committed(), incoming) // migrate.py:87
     Apply.applyMigrations(spark, ledger, pending, queueExec, timeoutSec, listener) // migrate.py:87
   }
 }

@@ -1,7 +1,5 @@
 package graft.migrator
 
-import java.sql.Timestamp
-
 /** An on-disk migration file discovered by [[MigrationScan]].
   *
   * Mirrors the reference's in-flight migration set
@@ -10,15 +8,3 @@ import java.sql.Timestamp
   */
 final case class Migration(version: Int, script: String, md5: String)
 
-/** One committed row of the migration ledger.
-  *
-  * Mirrors the reference's `schema_versions` table
-  * (reference: clickhouse_migrate/migrate.py:23 —
-  * `version UInt32, md5 String, script String, created_at DateTime DEFAULT now()`).
-  * Spark has no unsigned ints; `version` is a signed Int by design (SURVEY §1.2).
-  */
-final case class LedgerEntry(
-    version: Int,
-    md5: String,
-    script: String,
-    created_at: Timestamp)

@@ -48,7 +48,7 @@ object MigrationOps {
 
   /** Flagship: the full-outer-join reconciliation, pending set out. */
   val reconcilePending: Q = (s, dir) =>
-    Reconcile.migrationsToApply(committedClean(s, dir), incoming(s, dir))
+    Reconcile.relational(committedClean(s, dir), incoming(s, dir))
       .select(col("version").cast("int").as("version"), col("script"), col("md5"))
 
   /** Tampered detection on the joined relation (md5 <> c_md5). */

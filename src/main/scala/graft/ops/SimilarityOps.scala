@@ -581,14 +581,14 @@ object SimilarityOps {
         (0 until m).map(mm =>
           (mm, id, centered.slice(subDim * mm, subDim * (mm + 1)): Seq[Double]))
       })
-    for (_ <- 1 to PqIters) {
+    try for (_ <- 1 to PqIters) {
       val assigned = subs.withColumn("code",
         expr(pqAssignFold(s, s"${pqCbLit(cb)}[m]", "sv")))
       cb = rekey(assigned.groupBy("m", "code")
         .agg(array((0 until subDim).map(i => round(avg(expr(s"sv[$i]")), 6)): _*).as("c"))
         .collect().toSeq
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
-    }
+    } finally { subs.unpersist(); () }
     (mu, cb)
   }
 

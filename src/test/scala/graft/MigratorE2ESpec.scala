@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.migrator.{MigrationScan, Migrator, Observability, Statements}
 
@@ -123,13 +127,28 @@ class MigratorE2ESpec extends SparkSpec {
       "README.md" -> "not a migration")
     val ms = MigrationScan.scan(spark, home).collect().sortBy(_.version)
     assert(ms.map(_.version).toSeq == Seq(1, 2, 10))
-    // md5 matches java MessageDigest of file bytes — cross-checked by the
-    // distributed variant below
-    val dist = MigrationScan.scanDistributed(spark, home)
-      .collect().map(r => (r.getAs[Int]("version"), r.getAs[String]("md5")))
-      .sortBy(_._1)
-    assert(dist.map(_._1).toSeq == Seq(1, 2, 10))
-    assert(dist.map(_._2).toSeq == ms.map(_.md5).toSeq)
+    // md5 hex of the staged bytes: `SELECT 1` and `["SELECT 1"]`
+    assert(ms.map(_.md5).toSeq == Seq("b1698e52a0f16203489454196a0c6307",
+      "1a20d486e22f3ace0be534274c6a33d5", "b1698e52a0f16203489454196a0c6307"))
+  }
+
+  // reconcile runs on the driver: the ledger read is the only Spark job
+  test("migrate with nothing pending on a multi-version ledger starts one Spark job") {
+    val home = stage("m_noop", (1 to 5).map(v => s"V${v}__noop.sql" -> s"SELECT $v"): _*)
+    val ledger = s"$scratch/ledger_noop"
+    Migrator.migrate(spark, "pytest", home, ledger)
+    assert(spark.read.parquet(ledger).count() == 5)
+    val jobs = new AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Migrator.migrate(spark, "pytest", home, ledger)
+      Bridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get == 1)
   }
 
   test("ClickHouse type mapping") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.state.StateStore
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,7 +32,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     path.toString
   }
 
+  /** Streaming state must not outlive the session: StateStore's
+    * maintenance task is JVM-wide and, left running, keeps calling the
+    * stopped session's StateStoreCoordinator endpoint. */
   override def afterAll(): Unit = {
+    spark.streams.active.foreach(_.stop())
+    StateStore.stop()
     spark.stop()
     super.afterAll()
   }
